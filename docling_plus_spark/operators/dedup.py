@@ -17,24 +17,25 @@ row iff a *lower-id* row is near-duplicate-similar — which is
 SQL-expressible (full connected-components needs iterative joins; at
 curation scale greedy-by-id is the standard choice).
 
-Scale notes: the LSH bucket join shuffles on (band, band_hash) — a
-uniform key unless the corpus contains mega-clusters of near-identical
-pages. :func:`minhash_candidate_pairs` guards those with a bucket-size
-count + salt-split: buckets over ``max_bucket`` rows are decomposed into
-a grid of (group_i, group_j) sub-cells so every pair is still produced
-exactly once but no single task materializes more than ~``max_bucket``²
-pairs — one 10⁶-row bucket becomes 10⁶ spread cells instead of one
-10¹²-pair task. Signature columns are k×8 bytes/row — tiny next to html,
-and they are dropped *before* the candidate distinct (the distinct
-shuffles only (id_a, id_b, est) — 20 bytes/pair, not 2k×8). The
-all-pairs verify only runs inside buckets (bounded), never across the
-corpus.
+Scale notes: every banded family here and in ``phash``/``ann`` (MinHash
+bands, winnowing fingerprints, SimHash blocks, dHash bands, embedding
+LSH tables) forms its candidates through one primitive,
+:func:`bucket_pairs`: a self-join on the bucket key, shuffled on a
+uniform key unless the corpus holds mega-clusters of near-identical
+pages. It salt-splits those into sub-cells (see there), so no single
+task materializes more than ~``max_bucket``² pairs. Each caller keeps
+only its keying and its scoring. Signature columns
+are k×8 bytes/row — tiny next to html, and they are dropped *before*
+the candidate distinct (the distinct shuffles only (id_a, id_b, est) —
+20 bytes/pair, not 2k×8). The all-pairs verify only runs inside
+buckets (bounded), never across the corpus.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from docling_plus_spark.functions.expressions import md5_long
 
@@ -193,75 +194,105 @@ def minhash_prepare(
     )
 
 
-def minhash_candidate_pairs(
-    prepared: DataFrame, max_bucket: int = 4096, pin: bool = True
+# ---------------------------------------------------------------------------
+# Guarded bucket self-join (shared by every near-dup family)
+
+MAX_BUCKET = 4096
+
+
+def bucket_pairs(
+    keyed: DataFrame,
+    key: str | list,
+    payload: tuple | list = (),
+    max_bucket: int | None = None,
+    pin: bool = False,
 ) -> DataFrame:
-    """Self-join on band buckets → distinct (id_a < id_b) candidate pairs
-    with estimated Jaccard = fraction of equal signature components.
+    """Every unordered pair (id_a < id_b) of ``keyed`` rows that share a
+    bucket, exactly once per shared bucket.
 
-    The join shuffles on band_key (high-cardinality md5) — broadcast-free.
-    Two scale guards:
+    ``keyed`` holds ``id``, the bucket key — one column name, or a list
+    of names for a composite key — and the ``payload`` columns. The
+    output is ``id_a, id_b`` and ``<col>_a, <col>_b`` per payload
+    column. Callers do their own keying before and their own scoring
+    after; a pair sharing several buckets comes out once per bucket.
 
-    * **Mega-bucket salt-split**: a bucket of m rows produces m² join
-      output; one 10⁶-row near-identical cluster would pin a single task
-      on 10¹² pairs. Buckets over ``max_bucket`` are split into
-      s = ⌈m/max_bucket⌉ salted groups and the join key becomes
-      (band_key, cell) where each row joins every canonical cell
-      {min(i,g), max(i,g)} containing its group: every unordered group
-      pair meets in exactly one cell, each cell holds ≤ ~2·max_bucket
-      rows per side, and the m² work spreads over ~s²/2 cells instead of
-      one task. Normal buckets (s = 1) collapse to a single cell — zero
-      replication.
-    * **Payload-free distinct**: est_jaccard is computed *before* the
-      pair distinct, so the distinct shuffles (id_a, id_b, est) only —
-      signature arrays never ride through it.
+    Mega-bucket salt-split: a bucket of m rows makes m² join rows, so one
+    10⁶-row near-identical cluster would pin a single task on 10¹²
+    pairs. Each bucket is counted by a window over the key (one reader
+    of ``keyed``; a mega-bucket costs its window task O(m) rows, not
+    m²), and a bucket over ``max_bucket`` rows (default
+    :data:`MAX_BUCKET`, read at call time) is split into
+    s = ⌈m/max_bucket⌉ salted groups g = pmod(xxhash64(id), s). Each row
+    joins every canonical cell {min(i,g), max(i,g)} containing its
+    group: every unordered group pair meets in exactly one cell, each
+    cell holds ≤ ~2·max_bucket rows per side, and the m² work spreads
+    over ~s²/2 cells instead of one task. A pair is kept only in its own
+    cell (min(g_a,g_b), max(g_a,g_b)) — same-group pairs meet in all s
+    cells of their group. Normal buckets (s = 1) have a single cell:
+    zero replication.
+
+    The self-join reads one relation under two aliases, so the two
+    sides' exchanges are identical and Spark reuses one: the keying
+    upstream of the count runs once. ``pin`` eager-checkpoints the salted
+    cell table, so both join sides read it instead of re-running the
+    count and the cell explode.
     """
-    # eager checkpoint: prepared feeds the bucket count AND the join,
-    # and its lineage is the full md5-shingle + signature pass — without
-    # the pin that pass re-executed per consumer (runtime plan showed
-    # repeated Generates). Pinned rows are (id, sig longs, band_key).
-    # pin=False keeps the logical plan inspectable (plan-shape tests).
-    #
-    # Recoverability tradeoff (deliberate): localCheckpoint truncates
-    # lineage and stores blocks UNREPLICATED on executors, so on a real
-    # cluster a lost executor fails the job instead of recomputing, and
-    # the pin triggers execution at DataFrame-construction time. That is
-    # the right trade here because (a) the single-scan win is the 100 TB
-    # bottleneck (each unpinned consumer re-reads the corpus), and (b)
-    # the production deployment sits behind the epoch/snapshot layer
-    # (plans/incremental.py): a failed epoch restarts from the last
-    # committed snapshot, which is the recovery unit a global dedup pass
-    # needs anyway. A caller who wants lazy, recomputable lineage (e.g.
-    # composing into a larger plan) passes pin=False and may
-    # persist(StorageLevel.MEMORY_AND_DISK) + count() instead.
+    keys = [key] if isinstance(key, str) else list(key)
+    cap = MAX_BUCKET if max_bucket is None else max_bucket
+    size = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    salted = keyed.select(
+        *keys, "id", *payload, F.ceil(size / F.lit(cap)).cast("int").alias("_s")
+    ).withColumn("_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int"))
+    cells = salted.select(
+        *keys, "id", "_g", *payload,
+        F.explode(F.sequence(F.lit(0), F.col("_s") - 1)).alias("_i"),
+    ).select(
+        *keys, "id", "_g", *payload,
+        F.least("_i", "_g").alias("_u"), F.greatest("_i", "_g").alias("_v"),
+    )
+    if pin:
+        cells = cells.localCheckpoint(eager=True)
+    a, b = cells.alias("a"), cells.alias("b")
+    cond = (F.col("a.id") < F.col("b.id")) & (
+        F.col("a._u") == F.least("a._g", "b._g")
+    ) & (F.col("a._v") == F.greatest("a._g", "b._g"))
+    for k in [*keys, "_u", "_v"]:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    return a.join(b, cond).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in payload for s in "ab"],
+    )
+
+
+def minhash_candidate_pairs(
+    prepared: DataFrame, max_bucket: int = MAX_BUCKET, pin: bool = True
+) -> DataFrame:
+    """Band-bucket pairs (:func:`bucket_pairs` on band_key) → distinct
+    (id_a < id_b) candidates with estimated Jaccard = fraction of equal
+    signature components.
+
+    est_jaccard is computed *before* the pair distinct, so the distinct
+    shuffles (id_a, id_b, est) only — signature arrays never ride
+    through it.
+
+    ``pin`` eager-checkpoints ``prepared`` (id, sig longs, band_key) and
+    the salted cell table, so the md5-shingle + signature pass runs once
+    and ahead of the join. pin=False keeps the logical plan inspectable
+    (plan-shape tests). Recoverability tradeoff (deliberate):
+    localCheckpoint truncates lineage and stores blocks UNREPLICATED on
+    executors, so on a real cluster a lost executor fails the job
+    instead of recomputing, and the pin triggers execution at
+    DataFrame-construction time. The production deployment sits behind
+    the epoch/snapshot layer (plans/incremental.py): a failed epoch
+    restarts from the last committed snapshot, which is the recovery
+    unit a global dedup pass needs anyway. A caller who wants lazy,
+    recomputable lineage passes pin=False and may
+    persist(StorageLevel.MEMORY_AND_DISK) + count() instead.
+    """
     if pin:
         prepared = prepared.localCheckpoint(eager=True)
-    counts = prepared.groupBy("band_key").agg(F.count("*").alias("_m"))
-    splits = (F.ceil(F.col("_m") / F.lit(max_bucket))).cast("int").alias("_s")
-    p = prepared.join(counts.select("band_key", splits), "band_key").withColumn(
-        "_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int")
-    )
-    # each row lands in every canonical cell {min(i,g), max(i,g)} that
-    # contains its group — a pair with groups (gx, gy) meets in exactly
-    # the cell (min(gx,gy), max(gx,gy)) regardless of id order; same-group
-    # pairs meet in s cells and collapse in the final distinct
-    cells = F.transform(
-        F.sequence(F.lit(0), F.col("_s") - 1),
-        lambda i: F.struct(
-            F.least(i, F.col("_g")).alias("u"), F.greatest(i, F.col("_g")).alias("v")
-        ),
-    )
-    # pin keyed: it feeds both sides of the self-join
-    keyed = p.select("band_key", "id", "sig", F.explode(cells).alias("cell"))
-    if pin:
-        keyed = keyed.localCheckpoint(eager=True)
-    a = keyed.select(
-        "band_key", "cell", F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
-    )
-    b = keyed.select(
-        "band_key", "cell", F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-    )
-    joined = a.join(b, ["band_key", "cell"]).filter(F.col("id_a") < F.col("id_b"))
+    pairs = bucket_pairs(prepared, "band_key", ["sig"], max_bucket, pin)
     k = F.size(F.col("sig_a"))
     est = (
         F.size(
@@ -272,10 +303,7 @@ def minhash_candidate_pairs(
         ).cast("double")
         / k.cast("double")
     )
-    return (
-        joined.select("id_a", "id_b", F.round(est, 6).alias("est_jaccard"))
-        .distinct()
-    )
+    return pairs.select("id_a", "id_b", F.round(est, 6).alias("est_jaccard")).distinct()
 
 
 def minhash_dedup_keep(
@@ -385,9 +413,9 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
     identical — full recall at the default threshold (pigeonhole), unlike
     a 2-half scheme where a 1+2 split across halves escapes both blocks.
     """
-    # eager checkpoint: the (id, simhash) table feeds both sides of the
-    # block self-join; without the pin the full word-hash pass over the
-    # corpus ran once per side (runtime plan audit)
+    # eager checkpoint: the token-vote aggregation runs once, ahead of
+    # the join, and the join plan starts from the pinned (id, simhash)
+    # rows
     sim_df = sim_df.localCheckpoint(eager=True)
     width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
@@ -405,15 +433,14 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
         "simhash",
         F.explode(F.array(*blocks)).alias("block"),
     )
-    a = keyed.select("block", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"))
-    b = keyed.select("block", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"))
     return (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
+        # pin the cell table as well: both join sides read it instead
+        # of re-running the block and cell explodes
+        bucket_pairs(keyed, "block", ["simhash"], pin=True)
+        .distinct()  # a pair may share several blocks
         .withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -545,50 +572,24 @@ def winnow_candidate_pairs(
     bounds output volume at max_doc_freq^2/2 pairs per fingerprint.
     None = keep everything (small/benchmark corpora only).
 
-    Scale shape: explode fingerprints (narrow), self-join shuffling on
-    the fingerprint value, then groupBy(id_a, id_b) count. A fingerprint
-    shared by m documents yields m^2 join rows, so the same mega-bucket
-    salt-split guard as :func:`minhash_candidate_pairs` applies: buckets
-    over ``max_bucket`` are decomposed into canonical grid cells
-    {min(i,g), max(i,g)} so no single task materializes the m^2 blowup.
-    The join carries only (fingerprint, id) — no payloads.
+    Scale shape: explode fingerprints (narrow), :func:`bucket_pairs` on
+    the fingerprint value (mega-bucket guarded), then groupBy(id_a, id_b)
+    count. bucket_pairs emits a pair once per shared fingerprint, so the
+    count is the shared-fingerprint count. The join carries only
+    (fingerprint, id) — no payloads.
     """
-    # eager checkpoint: fp feeds the frequency count AND the pair join,
-    # and the winnow transform chain is the single most expensive
-    # projection in the repo — without the pin it re-executed per
-    # consumer (6 Generate nodes in the runtime plan; corpus text read
-    # repeatedly). The pinned table is (id, fingerprint) longs only.
+    # eager checkpoint: the winnow transform chain is the single most
+    # expensive projection in the repo; pinned, it runs once and ahead
+    # of the join. The pinned table is (id, fingerprint) longs only.
     fp = winnow_fingerprints_exploded(df, id_col, text_col, k, window)
     if pin:
         fp = fp.localCheckpoint(eager=True)
-    counts = fp.groupBy("fingerprint").agg(F.count("*").alias("_m"))
     if max_doc_freq is not None:
-        counts = counts.filter(F.col("_m") <= max_doc_freq)
-    splits = (F.ceil(F.col("_m") / F.lit(max_bucket))).cast("int").alias("_s")
-    p = fp.join(counts.select("fingerprint", splits), "fingerprint").withColumn(
-        "_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int")
-    )
-    cells = F.transform(
-        F.sequence(F.lit(0), F.col("_s") - 1),
-        lambda i: F.struct(
-            F.least(i, F.col("_g")).alias("u"), F.greatest(i, F.col("_g")).alias("v")
-        ),
-    )
-    # pin keyed too: it feeds BOTH sides of the self-join (a re-derive
-    # would double the explode); (fingerprint, cell, id) scalars only
-    keyed = p.select("fingerprint", "id", F.explode(cells).alias("cell"))
-    if pin:
-        keyed = keyed.localCheckpoint(eager=True)
-    a = keyed.select("fingerprint", "cell", F.col("id").alias("id_a"))
-    b = keyed.select("fingerprint", "cell", F.col("id").alias("id_b"))
-    joined = (
-        a.join(b, ["fingerprint", "cell"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # same-group pairs meet in s cells — collapse before counting
-        .select("fingerprint", "id_a", "id_b")
-        .distinct()
-    )
-    return joined.groupBy("id_a", "id_b").agg(
+        # partitioned like bucket_pairs' own count: no extra shuffle
+        m = F.count(F.lit(1)).over(Window.partitionBy("fingerprint"))
+        fp = fp.withColumn("_m", m).filter(F.col("_m") <= max_doc_freq)
+    pairs = bucket_pairs(fp, "fingerprint", max_bucket=max_bucket, pin=pin)
+    return pairs.groupBy("id_a", "id_b").agg(
         F.count("*").alias("shared_fingerprints")
     )
 
@@ -816,11 +817,12 @@ def minhash_incremental_pairs(
     new_id < other_id; signatures never ride through the distinct
     (payload-free, same discipline as :func:`minhash_candidate_pairs`).
 
-    The join shuffles on band_key. The same mega-bucket consideration
-    applies; here the probe side is the (small) daily batch so bucket
-    blowup is bounded by |new ∩ bucket| · |index ∩ bucket| — salting can
-    be layered exactly as in minhash_candidate_pairs if a boilerplate
-    bucket dominates an epoch.
+    The join shuffles on band_key. It joins a probe side to a build
+    side, so it is not a :func:`bucket_pairs` self-join and carries no
+    salt-split; the probe side is the (small) daily batch, so bucket
+    blowup is bounded by |new ∩ bucket| · |index ∩ bucket|. The same
+    canonical-cell salting would apply if a boilerplate bucket came to
+    dominate an epoch.
     """
     # eager checkpoint: new_prepared feeds BOTH the probe side and the
     # new-new half of the build side — without the pin the md5-shingle

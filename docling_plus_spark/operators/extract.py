@@ -76,24 +76,20 @@ def _classify_failure(exc: BaseException) -> str:
     return f"convert_error:{name}"
 
 
-def _reject_rows(urls, reasons, passthrough: pd.DataFrame) -> pd.DataFrame:
-    n = len(urls)
+# a failure row: every column not given is None, counts 0, no time
+_FAILURE_ROW = dict.fromkeys(EXTRACT_SCHEMA.fieldNames()) | {
+    "status": "failure",
+    "num_items": 0,
+    "num_tables": 0,
+    "extract_ms": 0.0,
+}
+
+
+def _rows_frame(rows: list, passthrough: pd.DataFrame) -> pd.DataFrame:
+    """EXTRACT_SCHEMA frame of ``rows`` (dicts of the columns that differ
+    from a failure row), with the passthrough columns appended."""
     res = pd.DataFrame(
-        {
-            "url": urls,
-            "status": ["failure"] * n,
-            "failure_class": reasons,
-            "error": [None] * n,
-            "num_items": [0] * n,
-            "num_tables": [0] * n,
-            "text": [None] * n,
-            "md": [None] * n,
-            "itxt": [None] * n,
-            "doc_json": [None] * n,
-            "doctags": [None] * n,
-            "html_out": [None] * n,
-            "extract_ms": [0.0] * n,
-        }
+        {k: [r.get(k, v) for r in rows] for k, v in _FAILURE_ROW.items()}
     )
     if len(passthrough.columns):
         res = pd.concat([res, passthrough.reset_index(drop=True)], axis=1)
@@ -118,10 +114,7 @@ def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, i
         else ["html"] * len(urls)
     )
 
-    out = {k: [] for k in (
-        "url", "status", "failure_class", "error", "num_items",
-        "num_tables", "text", "md", "itxt", "doc_json", "doctags", "html_out", "extract_ms",
-    )}
+    rows = []
     for url, blob, fmt in zip(urls, blobs, fmts):
         t0 = time.perf_counter()
         try:
@@ -129,44 +122,25 @@ def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, i
             stem = name.rsplit(".", 1)[0] if "." in name else name
             doc = convert_bytes(bytes(blob or b""), fmt or "html", name=stem, filename=name)
             items = [it for it, _ in doc.iterate_items(doc.body, with_groups=False)]
-            out["url"].append(url)
-            out["status"].append("success")
-            out["failure_class"].append(None)
-            out["error"].append(None)
-            out["num_items"].append(len(items))
-            out["num_tables"].append(
-                sum(1 for it in items if isinstance(it, TableItem))
-            )
-            out["text"].append(export_to_text(doc))
-            out["md"].append(export_to_markdown(doc))
-            out["itxt"].append(export_to_element_tree(doc))
-            out["doc_json"].append(doc.export_to_json() if include_json else None)
+            row = {
+                "status": "success",
+                "num_items": len(items),
+                "num_tables": sum(1 for it in items if isinstance(it, TableItem)),
+                "text": export_to_text(doc),
+                "md": export_to_markdown(doc),
+                "itxt": export_to_element_tree(doc),
+                "doc_json": doc.export_to_json() if include_json else None,
+            }
             _dd = (doc.export_to_dict()
                    if (include_doctags or include_html) else None)
-            out["doctags"].append(
-                export_to_doctags(_dd) if include_doctags else None
-            )
-            out["html_out"].append(
-                export_to_html(_dd) if include_html else None
-            )
+            row["doctags"] = export_to_doctags(_dd) if include_doctags else None
+            row["html_out"] = export_to_html(_dd) if include_html else None
         except Exception as exc:  # noqa: BLE001 — row status, not job failure
-            out["url"].append(url)
-            out["status"].append("failure")
-            out["failure_class"].append(_classify_failure(exc))
-            out["error"].append(repr(exc)[:500])
-            out["num_items"].append(0)
-            out["num_tables"].append(0)
-            out["text"].append(None)
-            out["md"].append(None)
-            out["itxt"].append(None)
-            out["doc_json"].append(None)
-            out["doctags"].append(None)
-            out["html_out"].append(None)
-        out["extract_ms"].append((time.perf_counter() - t0) * 1e3)
-    res = pd.DataFrame(out)
-    if len(passthrough.columns):
-        res = pd.concat([res, passthrough.reset_index(drop=True)], axis=1)
-    return res
+            row = {"failure_class": _classify_failure(exc), "error": repr(exc)[:500]}
+        row["url"] = url
+        row["extract_ms"] = (time.perf_counter() - t0) * 1e3
+        rows.append(row)
+    return _rows_frame(rows, passthrough)
 
 
 def _extract_fn(max_batch_bytes: int, passthrough_cols: list, gated: bool, include_json: bool, include_doctags: bool, include_html: bool):
@@ -176,9 +150,11 @@ def _extract_fn(max_batch_bytes: int, passthrough_cols: list, gated: bool, inclu
                 mask = pdf["_convert"].astype(bool)
                 rej = pdf[~mask]
                 if len(rej):
-                    yield _reject_rows(
-                        rej["url"].tolist(),
-                        rej["_reject_reason"].tolist(),
+                    yield _rows_frame(
+                        [
+                            {"url": u, "failure_class": r}
+                            for u, r in zip(rej["url"], rej["_reject_reason"])
+                        ],
                         rej[passthrough_cols],
                     )
                 pdf = pdf[mask].reset_index(drop=True)

@@ -301,10 +301,71 @@ def test_winnow_candidate_pairs_planted(spark):
     assert pairs[(1, 2)] == len(fps[1] & fps[2])
 
 
-def test_winnow_candidate_pairs_mega_bucket(spark):
-    """Degenerate corpus: many identical documents all share every
-    fingerprint; the salt-split guard (tiny max_bucket) must still emit
-    every unordered pair exactly once."""
+def _mega_bucket_run(spark, family, n):
+    """Runner of ``family`` over ``n`` rows that all share at least one
+    of its buckets and are all near-duplicates of each other."""
+    import random
+
+    from docling_plus_spark.operators import dedup
+    from docling_plus_spark.operators.dedup import winnow_candidate_pairs
+    from docling_plus_spark.operators.phash import dhash_near_pairs
+
+    same_text = spark.createDataFrame(
+        [(i, "identical content repeated for the degenerate case") for i in range(n)],
+        "doc_id long, text string",
+    )
+    if family == "minhash":
+        prep = minhash_prepare(same_text)
+        return lambda: minhash_candidate_pairs(prep, max_bucket=dedup.MAX_BUCKET)
+    if family == "winnow":
+        return lambda: winnow_candidate_pairs(same_text, max_bucket=dedup.MAX_BUCKET)
+    if family == "simhash":
+        # blocks 0-2 shared by all rows; one flipped bit in block 3
+        sim = spark.createDataFrame(
+            [(i, 0x005A5A5A ^ (1 << (24 + i % 8))) for i in range(n)],
+            "id long, simhash long",
+        )
+        return lambda: simhash_near_pairs(sim, max_hamming=3)
+    if family == "dhash":
+        # distinct hashes (so the exact-class collapse keeps every row)
+        # sharing bands 0-6; band 7 has <= 3 set bits, so pairs differ
+        # in <= 6 bits
+        low = [v for v in range(256) if bin(v).count("1") <= 3][:n]
+        hashes = spark.createDataFrame(
+            [(i, "decoded", 8, 8, "01" * 28 + format(v, "08b")) for i, v in enumerate(low)],
+            "media_id long, status string, width int, height int, dhash string",
+        )
+        return lambda: dhash_near_pairs(hashes, max_hamming=6)
+    # lsh: all-positive vectors share every table's sign bucket
+    rnd = random.Random(11)
+    emb = spark.createDataFrame(
+        [(i, [rnd.uniform(0.1, 1.0) for _ in range(32)]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    return lambda: embedding_near_dup(emb, threshold=-1.0)
+
+
+@pytest.mark.parametrize("family", ["minhash", "winnow", "simhash", "dhash", "lsh"])
+def test_bucket_pairs_mega_bucket(spark, monkeypatch, family):
+    """Degenerate corpus: every row shares one oversized bucket. With a
+    tiny MAX_BUCKET the salt-split guard must still emit every pair
+    exactly once — the same rows as an effectively unguarded run."""
+    from docling_plus_spark.operators import dedup
+
+    n = 30
+    run = _mega_bucket_run(spark, family, n)
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 1 << 30)
+    wide = sorted(map(tuple, run().collect()))
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 4)
+    guarded = sorted(map(tuple, run().collect()))
+    assert [r[:2] for r in guarded] == [(i, j) for i in range(n) for j in range(i + 1, n)]
+    assert guarded == wide
+
+
+def test_winnow_max_doc_freq_drops_boilerplate(spark):
+    """The MOSS boilerplate rule: fingerprints in > max_doc_freq docs are
+    uninteresting — on an all-identical corpus that drops everything,
+    and a threshold at the corpus size keeps every pair."""
     from docling_plus_spark.operators.dedup import winnow_candidate_pairs
 
     n = 30
@@ -312,15 +373,8 @@ def test_winnow_candidate_pairs_mega_bucket(spark):
         [(i, "identical content repeated for the degenerate case") for i in range(n)],
         "doc_id long, text string",
     )
-    out = winnow_candidate_pairs(df, max_bucket=4).collect()
-    assert len(out) == n * (n - 1) // 2
-    counts = {r.shared_fingerprints for r in out}
-    assert len(counts) == 1  # identical docs → identical overlap count
-    # the MOSS boilerplate rule: fingerprints in >max_doc_freq docs are
-    # uninteresting — on an all-identical corpus that drops everything
     assert winnow_candidate_pairs(df, max_doc_freq=10).count() == 0
-    # and a threshold above the corpus size keeps all pairs
-    assert winnow_candidate_pairs(df, max_doc_freq=n).count() == len(out)
+    assert winnow_candidate_pairs(df, max_doc_freq=n).count() == n * (n - 1) // 2
 
 
 def test_winnow_dedup_keep_policy(spark):

@@ -1,15 +1,12 @@
-"""Image-text pair mining + mixture planning (operators/imagepairs.py)."""
+"""Image-text pair mining (operators/imagepairs.py) + mixture planning
+(operators/mixture.py)."""
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from docling_plus_spark.operators.imagepairs import (
-    image_alt_pairs,
-    image_alt_pairs_sql,
-    mixture_plan,
-    mixture_plan_sql,
-)
+from docling_plus_spark.operators.imagepairs import image_alt_pairs, image_alt_pairs_sql
+from docling_plus_spark.operators.mixture import mixture_plan, mixture_plan_sql
 from docling_plus_spark.plans import build_session
 
 

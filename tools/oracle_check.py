@@ -11,9 +11,17 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the repo root, importable here and on the Python workers (mapInPandas
+# UDFs import the package on the executors, which read PYTHONPATH from
+# the environment the session starts in)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def _norm_cell(v):
