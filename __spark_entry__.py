@@ -157,7 +157,7 @@ def _q_doctags_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     cli/main.py:281-284 save_as_doctags; serializer byte-verified against
     the 12 reference .doctags.txt goldens in tests/test_doctags.py)."""
     out = extract_pipeline(
-        synth_pages_from_documents(spark, sf_dir), include_doctags=True
+        synth_pages_from_documents(spark, sf_dir), include=("doctags",)
     )
     return out.select("url", "doctags")
 
@@ -167,7 +167,7 @@ def _q_html_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     cli/main.py:228-259 save_as_html; round-trip-verified against every
     reference HTML fixture in tests/test_html_sink.py)."""
     out = extract_pipeline(
-        synth_pages_from_documents(spark, sf_dir), include_html=True
+        synth_pages_from_documents(spark, sf_dir), include=("html",)
     )
     return out.select("url", "html_out")
 
@@ -1524,7 +1524,7 @@ def _q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.sources.web_pages import synth_pages_from_documents
 
     pages = synth_pages_from_documents(spark, sf_dir)
-    extracted = extract_pipeline(pages, include_json=True)
+    extracted = extract_pipeline(pages, include=("json",))
     return chunk_documents_stage(extracted, max_tokens=64)
 
 

@@ -20,4 +20,4 @@ from .pptx_backend import convert_pptx  # noqa: F401
 from .uspto_backend import convert_uspto  # noqa: F401
 from .vtt_backend import convert_vtt  # noqa: F401
 from .xlsx_backend import convert_xlsx  # noqa: F401
-from .registry import CONVERTERS, convert_bytes  # noqa: F401
+from .registry import CONVERTERS, convert_bytes, convert_page  # noqa: F401

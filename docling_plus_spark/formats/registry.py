@@ -81,3 +81,13 @@ def convert_bytes(
     """Dispatch one document; raises KeyError for unsupported formats
     (the extraction stage turns that into an unsupported_format row)."""
     return CONVERTERS[fmt](data, name=name, filename=filename)
+
+
+def convert_page(url: str, data, fmt) -> DLDocument:
+    """Dispatch one crawled page: the document is named after the url's
+    last path segment (query dropped; ``doc`` when empty), its stem
+    without the extension; null bytes convert as empty, a null format as
+    html."""
+    name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
+    stem = name.rsplit(".", 1)[0] if "." in name else name
+    return convert_bytes(bytes(data or b""), fmt or "html", name=stem, filename=name)

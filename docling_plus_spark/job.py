@@ -36,6 +36,18 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from docling_plus_spark.operators.extract import SURFACES
+from docling_plus_spark.plans.pipeline import ENGINE_CONF
+
+
+def _surfaces(arg: str) -> tuple:
+    include = tuple(s for s in arg.split(",") if s)
+    unknown = [s for s in include if s not in SURFACES]
+    if unknown:
+        raise argparse.ArgumentTypeError(
+            f"unknown surface(s) {unknown}; choose from {SURFACES}")
+    return include
+
 
 def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description="docling-plus-spark extraction job")
@@ -51,23 +63,17 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
     p.add_argument("--num-partitions", type=int, default=None,
                    help="skew-scatter width for the extract stage "
                    "(default: session parallelism)")
-    p.add_argument("--include", default="",
+    p.add_argument("--include", type=_surfaces, default=(),
                    help="extra sink surfaces, comma-separated from "
-                   "{json,doctags,html}")
+                   f"{','.join(SURFACES)} (json → doc_json, html → html_out); "
+                   "an unknown name is a usage error")
     return p.parse_args(argv)
 
 
 def build_job_session(app_name: str = "docling-plus-spark-job") -> SparkSession:
     """Session for spark-submit: master/executors come from the submit
-    command line, only engine-required conf is set here."""
-    return (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
-        .getOrCreate()
-    )
+    command line, only the engine's conf (``ENGINE_CONF``) is set here."""
+    return SparkSession.builder.appName(app_name).config(map=ENGINE_CONF).getOrCreate()
 
 
 def run(spark: SparkSession, args: argparse.Namespace) -> int:
@@ -83,10 +89,9 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
     n_partitions = args.num_partitions or spark.sparkContext.defaultParallelism
     total = 0
     for _ in range(epoch_budget):
-        include = tuple(s for s in args.include.split(",") if s)
         summary = run_epoch(
             pages, results, metrics,
-            num_partitions=n_partitions, limit=args.limit, include=include,
+            num_partitions=n_partitions, limit=args.limit, include=args.include,
         )
         print(json.dumps(summary), flush=True)
         total += summary["processed"]

@@ -10,21 +10,22 @@ crossing the JVM boundary), errors become row status, never exceptions
 (reference: ConversionStatus, base_models.py:46-52).
 
 Scale design:
-* **Skew**: page sizes are heavy-tailed. :func:`skew_repartition` salts on
-  ``xxhash64(url)`` so giant documents scatter uniformly instead of
+* **Skew**: page sizes are heavy-tailed. :func:`skew_repartition` scatters
+  on ``xxhash64(url)`` so giant documents spread uniformly instead of
   hot-spotting one task (SURVEY.md §4.2 Custom #1).
 * **Memory**: the UDF re-chunks each incoming Arrow batch so no output
-  pandas frame exceeds ``max_batch_bytes`` of input HTML — giant documents
+  pandas frame exceeds ``MAX_BATCH_BYTES`` of input HTML — giant documents
   flow through in small batches, tiny ones in big batches (the reference's
   batch-size knobs, datamodel/settings.py:28-35, made adaptive).
-* **Pruning**: only (url, html) are touched; Catalyst prunes the rest at
-  the scan when downstream selects fewer columns.
+* **Pruning**: only (url, html), the gate and the ``PASSTHROUGH`` metadata
+  are touched; Catalyst prunes the rest at the scan when downstream
+  selects fewer columns.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -49,7 +50,15 @@ EXTRACT_SCHEMA = T.StructType(
     ]
 )
 
-_DEFAULT_MAX_BATCH_BYTES = 8 << 20  # 8 MiB of raw HTML per output batch
+#: the extra output surfaces a caller may ask for by name, beyond the
+#: text/md/itxt every success row carries
+SURFACES = ("json", "doctags", "html")
+
+#: re-chunk budget: input bytes per output batch (read at call time)
+MAX_BATCH_BYTES = 8 << 20  # 8 MiB of raw HTML per output batch
+
+#: derived metadata that rides through the UDF inside the Arrow batch
+PASSTHROUGH = ("doc_hash", "format", "nbytes")
 
 
 def _classify_failure(exc: BaseException) -> str:
@@ -91,12 +100,10 @@ def _rows_frame(rows: list, passthrough: pd.DataFrame) -> pd.DataFrame:
     res = pd.DataFrame(
         {k: [r.get(k, v) for r in rows] for k, v in _FAILURE_ROW.items()}
     )
-    if len(passthrough.columns):
-        res = pd.concat([res, passthrough.reset_index(drop=True)], axis=1)
-    return res
+    return pd.concat([res, passthrough.reset_index(drop=True)], axis=1)
 
 
-def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, include_doctags: bool, include_html: bool) -> pd.DataFrame:
+def _convert_chunk(urls: list, blobs: list, passthrough: pd.DataFrame, include: tuple) -> pd.DataFrame:
     # import inside the worker so the driver-side module graph stays lazy
     from docling_plus_spark.doc.doctags import export_to_doctags
     from docling_plus_spark.doc.html_sink import export_to_html
@@ -106,21 +113,14 @@ def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, i
         export_to_markdown,
         export_to_text,
     )
-    from docling_plus_spark.formats import convert_bytes
+    from docling_plus_spark.formats import convert_page
 
-    fmts = (
-        passthrough["format"].tolist()
-        if "format" in passthrough.columns
-        else ["html"] * len(urls)
-    )
-
+    want_json, want_doctags, want_html = (s in include for s in SURFACES)
     rows = []
-    for url, blob, fmt in zip(urls, blobs, fmts):
+    for url, blob, fmt in zip(urls, blobs, passthrough["format"].tolist()):
         t0 = time.perf_counter()
         try:
-            name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
-            stem = name.rsplit(".", 1)[0] if "." in name else name
-            doc = convert_bytes(bytes(blob or b""), fmt or "html", name=stem, filename=name)
+            doc = convert_page(url, blob, fmt)
             items = [it for it, _ in doc.iterate_items(doc.body, with_groups=False)]
             row = {
                 "status": "success",
@@ -129,12 +129,11 @@ def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, i
                 "text": export_to_text(doc),
                 "md": export_to_markdown(doc),
                 "itxt": export_to_element_tree(doc),
-                "doc_json": doc.export_to_json() if include_json else None,
+                "doc_json": doc.export_to_json() if want_json else None,
             }
-            _dd = (doc.export_to_dict()
-                   if (include_doctags or include_html) else None)
-            row["doctags"] = export_to_doctags(_dd) if include_doctags else None
-            row["html_out"] = export_to_html(_dd) if include_html else None
+            _dd = doc.export_to_dict() if (want_doctags or want_html) else None
+            row["doctags"] = export_to_doctags(_dd) if want_doctags else None
+            row["html_out"] = export_to_html(_dd) if want_html else None
         except Exception as exc:  # noqa: BLE001 — row status, not job failure
             row = {"failure_class": _classify_failure(exc), "error": repr(exc)[:500]}
         row["url"] = url
@@ -143,98 +142,84 @@ def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, i
     return _rows_frame(rows, passthrough)
 
 
-def _extract_fn(max_batch_bytes: int, passthrough_cols: list, gated: bool, include_json: bool, include_doctags: bool, include_html: bool):
+def _extract_fn(include: tuple):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if gated and len(pdf):
-                mask = pdf["_convert"].astype(bool)
-                rej = pdf[~mask]
-                if len(rej):
-                    yield _rows_frame(
-                        [
-                            {"url": u, "failure_class": r}
-                            for u, r in zip(rej["url"], rej["_reject_reason"])
-                        ],
-                        rej[passthrough_cols],
-                    )
-                pdf = pdf[mask].reset_index(drop=True)
+            mask = pdf["_convert"].astype(bool)
+            rej = pdf[~mask]
+            if len(rej):
+                yield _rows_frame(
+                    [
+                        {"url": u, "failure_class": r}
+                        for u, r in zip(rej["url"], rej["_reject_reason"])
+                    ],
+                    rej[list(PASSTHROUGH)],
+                )
+            pdf = pdf[mask].reset_index(drop=True)
             urls = pdf["url"].tolist()
             blobs = pdf["html"].tolist()
-            extra = pdf[passthrough_cols]
+            extra = pdf[list(PASSTHROUGH)]
             # adaptive re-chunk: cut the batch whenever accumulated input
             # bytes exceed the budget, so one wiki_duck-scale run of rows
             # can't balloon a single Arrow output batch.
             start, acc = 0, 0
             for i, b in enumerate(blobs):
                 acc += len(b) if b is not None else 0
-                if acc >= max_batch_bytes and i + 1 > start:
+                if acc >= MAX_BATCH_BYTES:
                     yield _convert_chunk(
                         urls[start : i + 1], blobs[start : i + 1],
-                        extra.iloc[start : i + 1], include_json, include_doctags, include_html,
+                        extra.iloc[start : i + 1], include,
                     )
                     start, acc = i + 1, 0
             if start < len(blobs):
-                yield _convert_chunk(urls[start:], blobs[start:], extra.iloc[start:], include_json, include_doctags, include_html)
+                yield _convert_chunk(urls[start:], blobs[start:], extra.iloc[start:], include)
 
     return fn
 
 
 def extract_stage(
-    pages: DataFrame,
-    max_batch_bytes: int = _DEFAULT_MAX_BATCH_BYTES,
-    passthrough: tuple = (),
-    convert_col: Optional[Column] = None,
-    reject_reason_col: Optional[Column] = None,
-    include_json: bool = False,
-    include_doctags: bool = False,
-    include_html: bool = False,
+    prepared: DataFrame,
+    convert: Column,
+    reason: Column,
+    include: tuple = (),
 ) -> DataFrame:
-    """(url, html, …) → EXTRACT_SCHEMA rows, one per input row.
+    """Prepared page rows → EXTRACT_SCHEMA + ``PASSTHROUGH`` rows, one per
+    input row.
 
-    Column-prunes to (url, html) + ``passthrough`` before the UDF so
+    Column-prunes to (url, html) + ``PASSTHROUGH`` before the UDF so
     upstream scans read only what the stage needs. Passthrough columns
-    (cheap derived metadata like doc_hash/format/nbytes) ride along inside
+    (cheap derived metadata: doc_hash/format/nbytes) ride along inside
     the Arrow batch — carrying them is free compared to the shuffle join
     that re-attaching them afterwards would cost at scale.
 
-    ``convert_col`` (boolean) folds the validity/format gate into the same
+    ``convert`` (boolean) folds the validity/format gate into the same
     single pass: rows where it is false skip conversion and come out as
-    failure rows labeled by ``reject_reason_col`` — output stays total over
-    the input with one scan and zero extra stages.
+    failure rows labeled by ``reason`` — output stays total over the
+    input with one scan and zero extra stages. ``include`` names the
+    extra surfaces to build, a subset of ``SURFACES`` (``json`` →
+    ``doc_json``, ``doctags``, ``html`` → ``html_out``); the rest stay
+    null. An unknown name raises ``ValueError``.
     """
-    gated = convert_col is not None
-    cols: list = ["url", "html", *passthrough]
-    if gated:
-        cols += [
-            convert_col.alias("_convert"),
-            (reject_reason_col if reject_reason_col is not None
-             else F.lit("rejected")).alias("_reject_reason"),
-        ]
+    unknown = [s for s in include if s not in SURFACES]
+    if unknown:
+        raise ValueError(f"unknown surface(s) {unknown}; choose from {SURFACES}")
     schema = T.StructType(
         EXTRACT_SCHEMA.fields
-        + [f for f in pages.schema.fields if f.name in passthrough]
+        + [f for f in prepared.schema.fields if f.name in PASSTHROUGH]
     )
-    return pages.select(*cols).mapInPandas(
-        _extract_fn(max_batch_bytes, list(passthrough), gated, include_json, include_doctags, include_html), schema
-    )
+    return prepared.select(
+        "url", "html", *PASSTHROUGH,
+        convert.alias("_convert"), reason.alias("_reject_reason"),
+    ).mapInPandas(_extract_fn(include), schema)
 
 
-def skew_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    key: str = "url",
-    salt_col: Optional[Column] = None,
-) -> DataFrame:
-    """Salted uniform repartition on ``xxhash64(key)``.
+def skew_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Uniform repartition on ``xxhash64(url)``.
 
     Documents are independent rows, so *any* uniform scatter is correct;
-    hashing the url (plus an optional salt for adversarial key sets)
-    levels heavy-tailed byte sizes across tasks without a range shuffle.
-    Note: ``repartition(n, expr)`` Murmur3-hashes the expression value, so
-    we feed it the full-width xxhash64 (pre-bucketing with pmod would
-    collide buckets and leave partitions empty).
+    hashing the url levels heavy-tailed byte sizes across tasks without a
+    range shuffle. Note: ``repartition(n, expr)`` Murmur3-hashes the
+    expression value, so we feed it the full-width xxhash64 (pre-bucketing
+    with pmod would collide buckets and leave partitions empty).
     """
-    expr = F.xxhash64(F.col(key))
-    if salt_col is not None:
-        expr = F.xxhash64(F.col(key), salt_col)
-    return df.repartition(num_partitions, expr)
+    return df.repartition(num_partitions, F.xxhash64(F.col("url")))

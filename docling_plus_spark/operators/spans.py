@@ -43,18 +43,14 @@ def _spans_chunk(urls, blobs, fmts) -> pd.DataFrame:
 
     from docling_plus_spark.doc.serializers import export_to_text
     from docling_plus_spark.doc.spans import text_spans
-    from docling_plus_spark.formats import convert_bytes
+    from docling_plus_spark.formats import convert_page
 
     out = {k: [] for k in (
         "url", "item_idx", "label", "char_start", "char_end", "span_md5",
     )}
     for url, blob, fmt in zip(urls, blobs, fmts):
         try:
-            name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
-            stem = name.rsplit(".", 1)[0] if "." in name else name
-            doc = convert_bytes(
-                bytes(blob or b""), fmt or "html", name=stem, filename=name
-            )
+            doc = convert_page(url, blob, fmt)
             text = export_to_text(doc)
             for idx, label, start, end in text_spans(doc):
                 out["url"].append(url)

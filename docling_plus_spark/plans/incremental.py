@@ -55,11 +55,7 @@ def run_epoch(
             return {"epoch": results.last_epoch, "processed": 0, "remaining_before": 0}
         epoch = results.last_epoch + 1
         out = extract_pipeline(
-            todo,
-            num_partitions=num_partitions,
-            include_json="json" in include,
-            include_doctags="doctags" in include,
-            include_html="html" in include,
+            todo, num_partitions=num_partitions, include=include
         ).cache()
         try:
             processed = out.count()

@@ -19,7 +19,22 @@ from docling_plus_spark.functions import doc_hash, sniff_format
 from docling_plus_spark.operators.extract import extract_stage, skew_repartition
 
 #: DocumentLimits.max_file_size analog (datamodel/settings.py:22-25).
-DEFAULT_MAX_FILE_SIZE = 64 << 20
+MAX_FILE_SIZE = 64 << 20
+
+#: formats the extract stage converts; every other row becomes a
+#: classified failure row
+FORMATS = ("html", "pdf", "csv", "md", "vtt", "asciidoc", "docx", "pptx", "xlsx", "json", "xml_jats", "xml_uspto", "mets_gbs")
+
+#: the engine's conf, shared by every session builder: AQE on (runtime
+#: coalesce + skew-join splitting), Arrow transfer on with bounded
+#: batches so a batch of maximal documents stays well under executor
+#: memory even at 100 TB-scale page sizes
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    "spark.sql.execution.arrow.useLargeVarTypes": "true",
+}
 
 
 def build_session(
@@ -27,29 +42,19 @@ def build_session(
     shuffle_partitions: int = 32,
     app_name: str = "docling-plus-spark",
 ) -> SparkSession:
-    """Session with the engine's standard conf.
-
-    Arrow transfer on, AQE on (runtime coalesce + skew-join splitting),
-    bounded Arrow batches so a batch of maximal documents stays well under
-    executor memory even at 100 TB-scale page sizes.
-    """
+    """Session with the engine's standard conf (``ENGINE_CONF``) plus a
+    master, shuffle width and driver memory for local runs."""
     return (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
+        .config(map=ENGINE_CONF)
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
 
 
-def prepare_pages(
-    pages: DataFrame,
-    max_file_size: int = DEFAULT_MAX_FILE_SIZE,
-) -> DataFrame:
+def prepare_pages(pages: DataFrame) -> DataFrame:
     """S2+S3+S4: derive format/doc_hash/nbytes, gate validity.
 
     All pure column expressions — Catalyst pushes the size gate to the
@@ -63,7 +68,7 @@ def prepare_pages(
             "valid",
             F.col("html").isNotNull()
             & (F.col("nbytes") > 0)
-            & (F.col("nbytes") <= max_file_size),
+            & (F.col("nbytes") <= MAX_FILE_SIZE),
         )
     )
 
@@ -71,22 +76,19 @@ def prepare_pages(
 def extract_pipeline(
     pages: DataFrame,
     num_partitions: Optional[int] = None,
-    formats: tuple = ("html", "pdf", "csv", "md", "vtt", "asciidoc", "docx", "pptx", "xlsx", "json", "xml_jats", "xml_uspto", "mets_gbs"),
-    max_file_size: int = DEFAULT_MAX_FILE_SIZE,
-    include_json: bool = False,
-    include_doctags: bool = False,
-    include_html: bool = False,
+    include: tuple = (),
 ) -> DataFrame:
     """Full pipeline: returns EXTRACT_SCHEMA ⋈ (doc_hash, format, nbytes).
 
     Invalid / non-target-format rows are emitted with a failure status
     rather than dropped, so the output is total over the input (every url
-    accounted for — resume correctness depends on this).
+    accounted for — resume correctness depends on this). ``include``
+    names the extra surfaces to build (``operators.extract.SURFACES``).
     """
-    prepared = prepare_pages(pages, max_file_size=max_file_size)
+    prepared = prepare_pages(pages)
     if num_partitions:
         prepared = skew_repartition(prepared, num_partitions)
-    convert = F.col("valid") & F.col("format").isin(*formats)
+    convert = F.col("valid") & F.col("format").isin(*FORMATS)
     # raster content is classified (S8: reference routes IMAGE to OCR,
     # absent here), not lumped under unsupported_format — gated in the
     # plan so no Python is spent raising per image row
@@ -100,15 +102,7 @@ def extract_pipeline(
     )
     # single pass, single scan: derived metadata rides through the UDF
     # in-batch, gate folded into the stage (rejects become status rows)
-    return extract_stage(
-        prepared,
-        passthrough=("doc_hash", "format", "nbytes"),
-        convert_col=convert,
-        reject_reason_col=reason,
-        include_json=include_json,
-        include_doctags=include_doctags,
-        include_html=include_html,
-    )
+    return extract_stage(prepared, convert, reason, include)
 
 
 def lineage_metrics(out: DataFrame, epoch: int = 0) -> DataFrame:

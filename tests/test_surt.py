@@ -14,6 +14,7 @@ URLS = [
     "https://sub.a.b.example.co.uk:443/Path/",
     "http://www.example.com:80/?",
     "https://news.example.com/other",
+    "https://www2.example.com/a",
 ]
 WANT = [
     "com,example,news)/articles/politics?a=1&b=2",
@@ -22,6 +23,7 @@ WANT = [
     "uk,co,example,b,a,sub)/path/",
     "com,example)/",
     "com,example,news)/other",
+    "com,example)/a",
 ]
 
 

@@ -75,13 +75,11 @@ import pyarrow.parquet as pq
 
 def _convert(args):
     url, blob = args
-    from docling_plus_spark.formats import convert_bytes
+    from docling_plus_spark.formats import convert_page
     from docling_plus_spark.doc.serializers import (
         export_to_element_tree, export_to_markdown, export_to_text)
-    name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
-    stem = name.rsplit(".", 1)[0] if "." in name else name
     try:
-        doc = convert_bytes(bytes(blob or b""), "html", name=stem, filename=name)
+        doc = convert_page(url, blob, "html")
         return len(export_to_text(doc)) + len(export_to_markdown(doc)) + len(
             export_to_element_tree(doc))
     except Exception:
